@@ -165,20 +165,16 @@ def q_locf_backfill(spark, sf_dir):
 
 def q_locf_chunked(spark, sf_dir):
     # hot-key scale path: value-chunked two-pass LOCF — same oracle as locf
-    from towhee_spark.temporal import locf_chunked  # noqa: PLC0415
-
     t, _ = _t_c(spark, sf_dir)
-    return locf_chunked(t, ["tool"], chunk_seconds=3600.0).select(
+    return locf(t, ["tool"], chunk_seconds=3600.0).select(
         "conv_id", "turn_idx", F.col("tool_ff")
     )
 
 
 def q_asof_chunked(spark, sf_dir):
     # hot-key scale path: chunked as-of sweep — same oracle as asof_backward
-    from towhee_spark.temporal import asof_join_chunked  # noqa: PLC0415
-
     t, c = _t_c(spark, sf_dir)
-    j = asof_join_chunked(t, c, direction="backward", chunk_seconds=3600.0)
+    j = asof_join(t, c, direction="backward", chunk_seconds=3600.0)
     return j.select("conv_id", "turn_idx", "ctx_score", "ctx_label")
 
 
@@ -186,11 +182,9 @@ def q_lag_lead_chunked(spark, sf_dir):
     # HOT-KEY lag/lead: per-(key, time-chunk) lag/lead with boundary-row
     # arrays carried across chunks — same oracle as lag_lead (chunking
     # must be invisible); chunk=3600s splits conversations into chunks
-    from towhee_spark.temporal import lag_lead_chunked  # noqa: PLC0415
-
     t, _ = _t_c(spark, sf_dir)
     t = t.withColumn("text_len", F.length("text"))
-    out = lag_lead_chunked(t, ["text_len"], [1, 2, -1], chunk_seconds=3600.0)
+    out = lag_lead(t, ["text_len"], [1, 2, -1], chunk_seconds=3600.0)
     return out.select(
         "conv_id", "turn_idx", "text_len",
         F.col("text_len_lag1").alias("len_lag1"),
@@ -200,12 +194,12 @@ def q_lag_lead_chunked(spark, sf_dir):
 
 
 def q_bfill_chunked(spark, sf_dir):
-    # HOT-KEY backward fill (locf_chunked mirrored in time) — same oracle
+    # HOT-KEY backward fill (chunked LOCF mirrored in time) — same oracle
     # as bfill
-    from towhee_spark.temporal import bfill_chunked  # noqa: PLC0415
+    from towhee_spark import bfill  # noqa: PLC0415
 
     t, _ = _t_c(spark, sf_dir)
-    out = bfill_chunked(t, ["tool"], chunk_seconds=3600.0)
+    out = bfill(t, ["tool"], chunk_seconds=3600.0)
     return out.select("conv_id", "turn_idx", F.col("tool_bf"))
 
 
@@ -227,11 +221,9 @@ def q_sessionize_chunked(spark, sf_dir):
     # predecessor and session-count base) — chunking must be invisible:
     # gated against the SAME oracle as sessionize. chunk=3600s splits the
     # transcript conversations into several chunks each.
-    from towhee_spark.temporal import sessionize_chunked  # noqa: PLC0415
-
     t, _ = _t_c(spark, sf_dir)
-    out = sessionize_chunked(t, gap=1800.0, seq_out="session_seq",
-                             chunk_seconds=3600.0)
+    out = sessionize(t, gap=1800.0, seq_out="session_seq",
+                     chunk_seconds=3600.0)
     return out.select("conv_id", "turn_idx", "session_seq")
 
 

@@ -302,3 +302,69 @@ def test_kmeans_train_local_ragged_falls_back(spark):
     dist = clustering.kmeans_train(df, k=2, iters=2, impl="expr",
                                    collect_vectors=0)
     assert local == dist
+
+
+def test_kmeans_train_rejects_bad_impl_below_collect_cap(spark):
+    """A bad impl is an error on every table size, not only past the
+    collect_vectors cap where the distributed loop builds its cells."""
+    df = spark.createDataFrame(
+        [(6, [1.0, 0.0]), (7, [0.8, 0.2]), (1, [0.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    for cap in (100_000, 0):
+        with pytest.raises(ValueError, match="impl"):
+            clustering.kmeans_train(df, k=2, iters=1, impl="bogus",
+                                    collect_vectors=cap)
+
+
+def test_kmeans_train_local_freeze_matches_spark_half_up(spark):
+    """The local integer freeze must round like F.round(x, 0). The
+    component 4.7683715820312495e-07 at scale 2^20 is
+    p = 0.49999999999999994: Spark rounds it to 0, while floor(p + 0.5)
+    gives 1 because the add rounds up."""
+    comp = 4.7683715820312495e-07
+    assert comp * float(1 << 20) == 0.49999999999999994
+    df = spark.createDataFrame(
+        [(6, [1.0, comp]), (7, [0.0, 1.0])],
+        "vec_id long, embedding array<double>")
+    local = clustering.kmeans_train(df, k=2, iters=1, impl="expr")
+    dist = clustering.kmeans_train(df, k=2, iters=1, impl="expr",
+                                   collect_vectors=0)
+    assert local == dist
+    assert [1.0, 0.0] in [v for _, v in local]
+
+
+def test_round_half_up_matches_decimal_repr():
+    """_round_half_up == HALF_UP of the shortest decimal repr (what Spark's
+    round does) next to every k + 0.5 boundary and on odd integers above
+    2^52."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    base = np.concatenate([np.arange(-40, 40) + 0.5, [2.0**52 + 1, 2.0**52 + 3]])
+    p = np.concatenate([base, np.nextafter(base, np.inf),
+                        np.nextafter(base, -np.inf), -base])
+    exp = [float(Decimal(repr(float(x))).quantize(Decimal(1), ROUND_HALF_UP))
+           for x in p]
+    assert clustering._round_half_up(p).tolist() == exp
+
+
+def test_kmeans_train_local_survives_numpy2_scalar_repr(monkeypatch):
+    """numpy >= 2 prints float64 scalars as 'np.float64(0.5)', which
+    Decimal cannot parse; the local replay must not depend on the repr of
+    numpy scalars. The numpy-2 repr is simulated for the module."""
+    import builtins
+
+    import numpy as np
+
+    def np2_repr(x):
+        if isinstance(x, np.floating):
+            return f"np.float64({builtins.repr(float(x))})"
+        return builtins.repr(x)
+
+    vals = [[1.0, 0.0], [0.8, 0.2], [0.0, 1.0]]
+    cents = [(6, [1.0, 0.0]), (1, [0.0, 1.0])]
+    want = clustering._kmeans_train_local(vals, cents, 2, 2, 1 << 20)
+    monkeypatch.setattr(clustering, "repr", np2_repr, raising=False)
+    assert clustering._kmeans_train_local(vals, cents, 2, 2, 1 << 20) == want
+    assert want[0]

@@ -194,6 +194,10 @@ def test_profile_run_reports_metrics(spark):
     prof = profile_run(agg)
     assert any("Aggregate" in p["op"] for p in prof), [p["op"] for p in prof]
     assert metric_total(prof, "number of output rows") > 0
+    # every node once: the adaptive plan's executed and final trees are
+    # the same tree, so the scan reads the table exactly once
+    scans = [p for p in prof if p["op"].startswith("Scan")]
+    assert metric_total(scans, "number of output rows") == ev.count()
     assert "Aggregate" in format_profile(prof)
 
 

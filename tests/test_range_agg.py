@@ -232,7 +232,7 @@ def test_prefix_chunked_matches_unchunked(spark, corpus, include_current):
 
 def test_prefix_chunked_mega_key(spark):
     """A single hot conversation fans out across chunks with identical
-    results (the locf_chunked mega-conversation treatment)."""
+    results (the chunked-locf mega-conversation treatment)."""
     import datetime
 
     base = datetime.datetime(2026, 1, 1)

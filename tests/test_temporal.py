@@ -212,8 +212,6 @@ def test_locf_chunked_matches_locf_with_mega_conversation(spark):
     """Value-chunked two-pass LOCF == window LOCF, including a hot key
     spanning many chunks (the mega-conversation case plain
     Window.partitionBy would serialize onto one task)."""
-    from towhee_spark.temporal import locf_chunked
-
     rng = np.random.default_rng(5)
     rows = []
     # one mega conversation (5000 turns) + 20 small ones
@@ -229,7 +227,7 @@ def test_locf_chunked_matches_locf_with_mega_conversation(spark):
 
     exp = {(r.conv_id, r.turn_idx): r.tool_ff for r in locf(df, ["tool"]).collect()}
     # 600s chunks → the 5000s mega conversation spans ~9 chunks
-    got_df = locf_chunked(df, ["tool"], chunk_seconds=600.0)
+    got_df = locf(df, ["tool"], chunk_seconds=600.0)
     got = {(r.conv_id, r.turn_idx): r.tool_ff for r in got_df.collect()}
     assert got == exp
     from pyspark.sql import functions as SF
@@ -246,8 +244,6 @@ def test_sessionize_chunked_matches_sessionize(spark):
     """Value-chunked sessionize == window sessionize row-for-row, including
     a mega-conversation spanning many chunks, boundary rows landing exactly
     at chunk edges, and sessions crossing chunk boundaries."""
-    from towhee_spark.temporal import sessionize_chunked
-
     rng = np.random.default_rng(11)
     rows = []
     for conv, n in [("mega", 8000)] + [(f"c{i}", 25) for i in range(15)]:
@@ -264,7 +260,7 @@ def test_sessionize_chunked_matches_sessionize(spark):
 
     exp = {(r.conv_id, r.turn_idx): (r.session_id, r.seq)
            for r in sessionize(df, gap=600.0, seq_out="seq").collect()}
-    got_df = sessionize_chunked(df, gap=600.0, seq_out="seq", chunk_seconds=900.0)
+    got_df = sessionize(df, gap=600.0, seq_out="seq", chunk_seconds=900.0)
     got = {(r.conv_id, r.turn_idx): (r.session_id, r.seq) for r in got_df.collect()}
     assert got == exp
     # plan: no per-row window partitioned on the bare key
@@ -279,8 +275,6 @@ def test_lag_lead_chunked_and_bfill_chunked_match(spark):
     chunked bfill must equal their window forms row-for-row — including
     chunks SHORTER than the largest offset (the carry must chain across
     several chunks) and null values."""
-    from towhee_spark.temporal import bfill_chunked, lag_lead_chunked
-
     rng = np.random.default_rng(3)
     rows = []
     for conv, n in [("mega", 4000)] + [(f"c{i}", 7) for i in range(12)]:
@@ -301,15 +295,15 @@ def test_lag_lead_chunked_and_bfill_chunked_match(spark):
     exp = {(r.conv_id, r.turn_idx): tuple(r[n] for n in names)
            for r in lag_lead(df, ["text", "tool"], offs).collect()}
     got = {(r.conv_id, r.turn_idx): tuple(r[n] for n in names)
-           for r in lag_lead_chunked(df, ["text", "tool"], offs,
-                                     chunk_seconds=1000.0).collect()}
+           for r in lag_lead(df, ["text", "tool"], offs,
+                             chunk_seconds=1000.0).collect()}
     assert got == exp
 
     from towhee_spark import bfill
 
     exp_b = {(r.conv_id, r.turn_idx): r.tool_bf for r in bfill(df, ["tool"]).collect()}
     got_b = {(r.conv_id, r.turn_idx): r.tool_bf
-             for r in bfill_chunked(df, ["tool"], chunk_seconds=1000.0).collect()}
+             for r in bfill(df, ["tool"], chunk_seconds=1000.0).collect()}
     assert got_b == exp_b
 
 
@@ -317,11 +311,9 @@ def test_carry_join_broadcast_guard_plan_flips(spark, sdfs):
     """broadcast_carry is a plan hint only: False must flip the carry join
     from BroadcastHashJoin to a shuffled join (the 10^9-carry-rows escape
     hatch) with byte-identical results."""
-    from towhee_spark.temporal import locf_chunked
-
     st, _ = sdfs
-    bcast = locf_chunked(st, ["tool"], chunk_seconds=600.0, broadcast_carry=True)
-    shuf = locf_chunked(st, ["tool"], chunk_seconds=600.0, broadcast_carry=False)
+    bcast = locf(st, ["tool"], chunk_seconds=600.0, broadcast_carry=True)
+    shuf = locf(st, ["tool"], chunk_seconds=600.0, broadcast_carry=False)
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
@@ -334,21 +326,53 @@ def test_carry_join_broadcast_guard_plan_flips(spark, sdfs):
            sorted(((key(r), r.tool_ff) for r in shuf.collect()))
 
 
+@pytest.mark.parametrize("chunk_seconds", [None, 300.0])
+@pytest.mark.parametrize("op", ["locf", "bfill", "lag_lead", "sessionize"])
+def test_missing_order_column_raises_on_both_paths(spark, sdfs, op, chunk_seconds):
+    """The default order names turn_idx: a frame without it is an error
+    with or without chunks — never a silent fallback to ts alone, which
+    would leave the tie order undefined."""
+    from pyspark.errors import AnalysisException
+
+    st = sdfs[0].drop("turn_idx")
+    run = {
+        "locf": lambda: locf(st, ["tool"], chunk_seconds=chunk_seconds),
+        "bfill": lambda: bfill(st, ["tool"], chunk_seconds=chunk_seconds),
+        "lag_lead": lambda: lag_lead(st, ["text"], [1, -1],
+                                     chunk_seconds=chunk_seconds),
+        "sessionize": lambda: sessionize(st, chunk_seconds=chunk_seconds),
+    }[op]
+    with pytest.raises(AnalysisException, match="UNRESOLVED_COLUMN"):
+        run().collect()
+
+
+def test_asof_chunked_rejects_nearest_and_unorderable(spark, sdfs):
+    """The chunked as-of carry is a max/min over (ts, payload) structs:
+    'nearest' and unorderable payloads are refused up front."""
+    from pyspark.sql import functions as F
+
+    st, sc = sdfs
+    with pytest.raises(ValueError, match="backward|forward"):
+        asof_join(st, sc, direction="nearest", chunk_seconds=3600.0)
+    arr = sc.withColumn("ctx_label", F.array("ctx_label"))
+    with pytest.raises(ValueError, match="ORDERABLE"):
+        asof_join(st, arr, chunk_seconds=3600.0)
+    asof_join(st, arr)  # the bare sweep takes any payload
+
+
 @pytest.mark.parametrize("direction", ["backward", "forward"])
 @pytest.mark.parametrize("allow_exact", [True, False])
 def test_asof_chunked_matches_asof(spark, corpus, sdfs, direction, allow_exact):
     """Chunked as-of == plain as-of across all modes (1h chunks split the
     synthetic conversations into several chunks each)."""
-    from towhee_spark.temporal import asof_join_chunked
-
     st, sc = sdfs
     base = collect_sorted(
         asof_join(st, sc, direction=direction, allow_exact_matches=allow_exact,
                   tolerance=900.0)
     )
     chunked = collect_sorted(
-        asof_join_chunked(st, sc, direction=direction, allow_exact_matches=allow_exact,
-                          tolerance=900.0, chunk_seconds=3600.0)
+        asof_join(st, sc, direction=direction, allow_exact_matches=allow_exact,
+                  tolerance=900.0, chunk_seconds=3600.0)
     )
     assert_asof_matches(chunked, base)
 

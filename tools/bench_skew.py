@@ -2,9 +2,9 @@
 hazard and the chunked scale paths that remove it.
 
 A corpus where ONE conversation holds ~25% of all rows serializes any
-Window.partitionBy(conv_id) operator onto one task; locf_chunked /
-asof_join_chunked partition on (conv_id, time-chunk) with a cross-chunk
-carry, so the mega key spreads over many tasks. This script measures both
+Window.partitionBy(conv_id) operator onto one task; with
+``chunk_seconds=`` the temporal operators partition on (conv_id,
+time-chunk) with a cross-chunk carry, so the mega key spreads over many tasks. This script measures both
 plans on the same skewed input and prints one JSON line (results are
 appended to BENCH/BASELINE.md by hand after an idle-host run — never run
 other Spark jobs concurrently).
@@ -29,10 +29,9 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from towhee_spark import asof_join, locf, sessionize
+    from towhee_spark import asof_join, bfill, lag_lead, locf, sessionize
     from towhee_spark.session import get_spark
     from towhee_spark.synth import transcripts_spark
-    from towhee_spark.temporal import asof_join_chunked, locf_chunked
 
     spark = get_spark("skew", master=f"local[{cpus}]", shuffle_partitions=cpus)
 
@@ -72,11 +71,11 @@ def main() -> None:
         "cpus": cpus,
         "locf_window_sec": timed(lambda: force(locf(corpus, ["tool"]))),
         "locf_chunked_sec": timed(
-            lambda: force(locf_chunked(corpus, ["tool"], chunk_seconds=3600.0))
+            lambda: force(locf(corpus, ["tool"], chunk_seconds=3600.0))
         ),
         "asof_window_sec": timed(lambda: force(asof_join(corpus, ctx))),
         "asof_chunked_sec": timed(
-            lambda: force(asof_join_chunked(corpus, ctx, chunk_seconds=3600.0))
+            lambda: force(asof_join(corpus, ctx, chunk_seconds=3600.0))
         ),
     }
     # exact Towhee time_window: per-key recurrence window vs the (key,
@@ -112,26 +111,21 @@ def main() -> None:
     res["cw_chunked_sec"] = timed(lambda: force(cw(3600.0)))
 
     # sessionize: bare-key lag+running-sum vs chunked gap logic (round 3)
-    from towhee_spark.temporal import sessionize_chunked
-
     res["sess_window_sec"] = timed(
         lambda: force(sessionize(corpus, gap=1800.0, seq_out="seq")))
     res["sess_chunked_sec"] = timed(
-        lambda: force(sessionize_chunked(corpus, gap=1800.0, seq_out="seq",
-                                         chunk_seconds=3600.0)))
+        lambda: force(sessionize(corpus, gap=1800.0, seq_out="seq",
+                                 chunk_seconds=3600.0)))
 
     # lag/lead + bfill: the last two chunked pairs (round 3)
-    from towhee_spark import bfill, lag_lead
-    from towhee_spark.temporal import bfill_chunked, lag_lead_chunked
-
     res["ll_window_sec"] = timed(
         lambda: force(lag_lead(corpus, ["turn_idx"], [1, 2, -1])))
     res["ll_chunked_sec"] = timed(
-        lambda: force(lag_lead_chunked(corpus, ["turn_idx"], [1, 2, -1],
-                                       chunk_seconds=3600.0)))
+        lambda: force(lag_lead(corpus, ["turn_idx"], [1, 2, -1],
+                               chunk_seconds=3600.0)))
     res["bf_window_sec"] = timed(lambda: force(bfill(corpus, ["tool"])))
     res["bf_chunked_sec"] = timed(
-        lambda: force(bfill_chunked(corpus, ["tool"], chunk_seconds=3600.0)))
+        lambda: force(bfill(corpus, ["tool"], chunk_seconds=3600.0)))
     # expanding lifetime aggregates: bare-key range window vs chunked carry
     # (min/max carry is legal for expanding frames — session-3)
     from towhee_spark.temporal import expanding_agg

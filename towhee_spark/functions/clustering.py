@@ -97,6 +97,19 @@ def _ivf_sample_local(
                   key=lambda t: t[0])
 
 
+def _round_half_up(p):
+    """``F.round(p, 0)`` elementwise on a float64 array. Spark rounds the
+    shortest decimal repr HALF_UP; below 2^52 that is exact HALF_UP on the
+    binary value, because k + 0.5 is a double there. ``floor(p + 0.5)`` is
+    not: the add rounds (0.49999999999999994 gives 1). From 2^52 up every
+    double is an integer and keeps its value."""
+    import numpy as np  # noqa: PLC0415
+
+    a = np.abs(p)
+    fl = np.floor(a)
+    return np.sign(p) * (fl + (a - fl >= 0.5))
+
+
 def _kmeans_train_local(
     vals: list,
     cents: list[tuple],
@@ -115,16 +128,16 @@ def _kmeans_train_local(
     * cos = one ``dot / (na·nb)`` division under the same
       ``(na>0) & (nb>0)`` guard; centroid norms via kernels.py_norm
       (the literal-inlining fold the expr plan itself uses);
-    * ROUND(cos, 6) = Decimal(repr(x)) HALF_UP — Java's
+    * ROUND(cos, 6) = Decimal(repr(float(x))) HALF_UP — Java's
       BigDecimal.valueOf(double) rounds the SAME shortest decimal repr,
       verified bit-equal to F.round on 20k+ boundary-adversarial samples
       (nextafter around every k·1e-6 + 5e-7);
     * argmax = first strict (1−cos6, cid) min over cid-ascending
       centroids == the expr path's array_sort-ascending head;
-    * freeze = floor(|x·2^20| + 0.5)·sign — exact HALF_UP at 0 decimals
-      (the 0.5 boundary is representable and the +0.5 add exact below
-      2^52; same verification), int64 sums, and the SAME Python
-      ``int / (n·scale)`` division _rebuild_cents performs.
+    * freeze = :func:`_round_half_up` of x·2^20 — Spark's HALF_UP on the
+      shortest decimal repr, computed exactly in binary; int64 sums, and
+      the SAME Python ``int / (n·scale)`` division _rebuild_cents
+      performs.
 
     Returns (False, None) on any shape the replica does not cover
     (ragged/NULL-component vectors, non-finite cosines, sums that could
@@ -147,11 +160,10 @@ def _kmeans_train_local(
     for j in range(dim):
         accn = accn + m[:, j] * m[:, j]
     na = np.sqrt(accn)
-    # integer freeze (exact HALF_UP at 0 decimals, see docstring)
     p = m * float(scale)
     if not np.isfinite(p).all():
         return False, None
-    fz = np.where(p >= 0, np.floor(p + 0.5), -np.floor(-p + 0.5))
+    fz = _round_half_up(p)
     if float(np.abs(fz).max(initial=0.0)) * max(n_rows, 1) >= float(2**62):
         return False, None  # int64 sum could overflow; ANSI Spark would throw
     fz = fz.astype(np.int64)
@@ -171,7 +183,7 @@ def _kmeans_train_local(
             return False, None
         flat = cos.ravel()
         c6 = np.fromiter(
-            (float(Decimal(repr(x)).quantize(q6, rounding=ROUND_HALF_UP))
+            (float(Decimal(repr(float(x))).quantize(q6, rounding=ROUND_HALF_UP))
              for x in flat),
             dtype=np.float64, count=flat.size).reshape(cos.shape)
         d = 1.0 - c6
@@ -226,6 +238,10 @@ def kmeans_train(
     (id, vector) rows, so size it such that rows·dim·8 bytes stays well
     under ``spark.driver.maxResultSize`` (100k × dim 64 ≈ 51 MB; for
     dim ≥ 512 lower the cap, or pass 0 to always train distributed)."""
+    if impl not in ("arrow", "expr"):
+        # checked before the size probe: the local replay never builds
+        # cells_of, so a bad impl would pass on small tables only
+        raise ValueError(f"impl must be 'arrow' or 'expr', got {impl!r}")
     scale = 1 << scale_bits
     e = (
         index.select(

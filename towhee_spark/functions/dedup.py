@@ -907,7 +907,7 @@ def dedup_best_survivors(
     negation inside the max-struct, so the op is numeric-only by
     construction. A non-numeric id would silently cast('long') to NULL
     and drop every row — validated loudly up front instead (the
-    asof_join_chunked / kmeans_assign loud-guard convention)."""
+    chunked asof_join / kmeans_assign loud-guard convention)."""
     id_type = df.schema[id_col].dataType.simpleString()
     if id_type not in ("tinyint", "smallint", "int", "bigint"):
         raise ValueError(

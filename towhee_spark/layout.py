@@ -90,7 +90,7 @@ def suggest_chunk_seconds(
     ``hot_threshold``, then sizes ``chunk_seconds`` for the worst offender
     (highest rows/sec) so every hot key's (key, chunk) groups hold ≈
     ``target_rows_per_chunk`` rows — the value to pass to
-    ``temporal.*_chunked`` / ``time_window(chunk_seconds=)`` /
+    the temporal operators' ``chunk_seconds=`` / ``time_window(chunk_seconds=)`` /
     ``window(chunk_seconds=)``.
 
     Returns None when no key is hot (use the bare-key windows — the chunked

@@ -362,7 +362,7 @@ class Pipeline:
         ``chunk_seconds`` (exact path only) is the HOT-KEY lever: the
         realign recurrence is computed per (key, time-chunk) with a tiny
         per-chunk carry — same results, but a mega-key no longer serializes
-        onto one task (cf. temporal.locf_chunked). ``broadcast_carry``
+        onto one task (cf. temporal.locf(chunk_seconds=)). ``broadcast_carry``
         controls the carry join strategy (see temporal.carry_join)."""
         return self._append(_Node("time_window", _tup(in_cols), _tup(out_cols), fn,
                                   {"ts": timestamp_col, "size": size, "step": step,
@@ -817,7 +817,7 @@ def _compile_window(df: DataFrame, node: _Node, ctx: _Ctx) -> DataFrame:
         if chunk_s and not (keys and order):
             # silent fallback here would resurrect the bare-key mega-key
             # serialization chunk_seconds exists to remove (advisor r3) —
-            # loud, like asof_join_chunked's unorderable-payload guard
+            # loud, like chunked asof_join's unorderable-payload guard
             raise ValueError(
                 "window(chunk_seconds=...) requires apply(by=..., order=...): "
                 f"got by={keys!r}, order={order!r}"

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from typing import Any
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 
 
@@ -41,15 +42,18 @@ def _walk(jplan, depth: int, out: list[dict[str, Any]]) -> None:
     children = jplan.children()
     for i in range(children.size()):
         _walk(children.apply(i), depth + 1, out)
-    # adaptive plans hide the real tree behind finalPlan/inputPlan, and AQE
-    # query stages (Shuffle/BroadcastQueryStage) wrap their materialized
-    # subtree behind .plan() — descend through both so scans stay visible
-    for attr in ("executedPlan", "finalPhysicalPlan", "plan"):
+    # adaptive plans hide the real tree behind executedPlan (the final plan
+    # once the query ran; finalPhysicalPlan is the same tree, and walking
+    # both would count every node twice), and AQE query stages
+    # (Shuffle/BroadcastQueryStage) wrap their materialized subtree behind
+    # .plan() — descend through the first one the node has
+    for attr in ("executedPlan", "plan"):
         try:
             inner = getattr(jplan, attr)()
-            _walk(inner, depth + 1, out)
-        except Exception:
-            pass
+        except Py4JError:  # the node has no such method
+            continue
+        _walk(inner, depth + 1, out)
+        break
 
 
 def plan_profile(df: DataFrame) -> list[dict[str, Any]]:
